@@ -79,7 +79,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem exchange (two DECIMALs → 8 bytes; guide §2.3 — sum of
     per-row integer products is associative, so results are
     bit-identical; r11 interleaved A/B at sf10: 2.59 → 2.32 s,
-    probe_narrow_exchange.py).
+    2d4da17:scripts/probe_narrow_exchange.py).
     """
     cust = (load_table(spark, sf_dir, "customer")
             .filter(C("c_mktsegment") == "BUILDING")
@@ -135,22 +135,24 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality inside the join condition. The old shape applied all of
     this AFTER shuffling the full fact table — the exchange is the
     scale bottleneck, the broadcasts are free (r11 interleaved A/B,
-    results identical: sf10 7.38 s → 3.72 s; probe_q58_reorder.py).
+    results identical: sf10 7.38 s → 3.72 s;
+    2d4da17:scripts/probe_q58_reorder.py).
 
     r11 narrow-exchange pass (guide §2.3): the revenue product folds to
     one BIGINT before the lineitem exchange and the n_name STRING never
     crosses either exchange — the aggregate groups on the integer
     c_nationkey (1:1 with n_name by construction) and the 5-row name
     map re-attaches AFTER the agg as a broadcast. sf10 3.72 → 3.51 s,
-    rows identical (probe_narrow_exchange.py).
+    rows identical (2d4da17:scripts/probe_narrow_exchange.py).
 
     r12 dispatch trim (verdict item 5): the post-agg name attach joins
     plain `nation`, not the nation⋈region ASIA subtree — every
     c_nationkey reaching the aggregate already passed through the
     ASIA-customer cut, so the region re-filter was a provably-redundant
     extra BroadcastExchange+BHJ build per run (rows identical by
-    construction, asserted in probe_q5_trim.py; n_nationkey is unique in
-    nation, so the inner join can neither drop nor duplicate).
+    construction, asserted in 2d4da17:scripts/probe_q5_trim.py;
+    n_nationkey is unique in nation, so the inner join can neither drop
+    nor duplicate).
     """
     region = (load_table(spark, sf_dir, "region")
               .filter(C("r_name") == "ASIA").select("r_regionkey"))
@@ -218,7 +220,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     so Catalyst's broadcast of it rebuilt a multi-million-row driver
     hash map per execution and is exactly the shape that dies at
     100 TB (same rule as q3/q9/q12). sf10 3.60 → 2.53 s, rows
-    identical (probe_narrow_exchange.py).
+    identical (2d4da17:scripts/probe_narrow_exchange.py).
     """
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey")
@@ -329,7 +331,7 @@ def q4_late_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
     interleaved A/B vs the semi-join shape, identical rows: sf10 min
     3.52 s → 3.34 s, and 2x+ better in every contended pass (the
     smaller exchange is also the more pressure-robust one) —
-    probe_q421_rewrite.py.
+    2d4da17:scripts/probe_q421_rewrite.py.
     """
     orders = (load_table(spark, sf_dir, "orders")
               .filter((C("o_orderdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
@@ -381,7 +383,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     attached, so it alone stays post-join. The old shape shuffled the
     full fact rows and applied every role cut after (r11 interleaved
     A/B, results identical: sf10 4.95 s → 2.56 s, ~2x in every pass;
-    probe_q58_reorder.py).
+    2d4da17:scripts/probe_q58_reorder.py).
 
     r11 narrow-exchange pass (guide §2.3): the revenue product and the
     ship year fold to BIGINTs before the lineitem exchange, and the two
@@ -389,7 +391,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1 = NATION_1, 2 = NATION_2 — a bijection by construction of the
     2-row filter); the names are re-derived from the codes AFTER the
     aggregate as a deterministic CASE. sf10 2.39 → 1.89 s, rows
-    identical (probe_narrow_exchange.py).
+    identical (2d4da17:scripts/probe_narrow_exchange.py).
     """
     nation = load_table(spark, sf_dir, "nation").filter(
         C("n_name").isin("NATION_1", "NATION_2"))
@@ -463,7 +465,8 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     of shipping every (p_partkey, p_type) pair: the broadcast build
     shrinks 6× and loses its string column at any scale. Measured sf10
     decomposition: scan+agg 0.60 s, +full-part broadcast 1.66 s,
-    +promo-subset left join 0.86 s (rows identical, probe_q14_promo.py).
+    +promo-subset left join 0.86 s (rows identical,
+    2d4da17:scripts/probe_q14_promo.py).
     """
     promo = (load_table(spark, sf_dir, "part")
              .filter(C("p_type") == "PROMO").select("p_partkey"))

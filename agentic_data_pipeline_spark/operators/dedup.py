@@ -63,7 +63,8 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     r8→r11 window shingle form was accidentally providing the same
     redistribution via its partitionBy(id) exchange, which is why the
     r12 Arrow generator regressed the sf0.1 LSH ops until this was put
-    back deliberately (probe_shingles_arrow.py before/after)."""
+    back deliberately (2d4da17:scripts/probe_shingles_arrow.py
+    before/after)."""
     from ..session import default_parallelism
 
     n = default_parallelism()
@@ -103,6 +104,9 @@ def _shingle_batches(n: int):
       codepoint order on the [a-z0-9 ] shingle alphabet), then
       np.unique over doc*K+rank keys — distinct AND (doc, string)-
       ordered in one C pass, decoded back via dictionary take.
+
+    Raises ValueError on a null id: the unique non-null id precondition
+    of shingles_exploded is enforced here, not only documented.
     """
     def gen(it):
         import numpy as np
@@ -114,6 +118,9 @@ def _shingle_batches(n: int):
         for batch in it:
             if batch.num_rows == 0:
                 continue
+            if batch.column("id").null_count:
+                raise ValueError("shingles_exploded: null id in input; "
+                                 "ids must be unique and non-null")
             ids = batch.column("id").to_numpy(zero_copy_only=False)
             text = batch.column("text")
             if text.null_count:
@@ -185,7 +192,7 @@ def shingles_exploded(df: DataFrame, id_col: str, text_col: str,
     whole shingle stream — per-doc work that never needed to leave its
     scan task. The r11 curation decomposition charged 80% of that op to
     this generator; interleaved A/B on the v3 sf10 lake:
-    scripts/probe_shingles_arrow.py.
+    2d4da17:scripts/probe_shingles_arrow.py.
 
     Docs with < n tokens yield their single short shingle, docs with ZERO
     alnum tokens yield no rows — the exact JVM-form corner semantics
@@ -193,10 +200,11 @@ def shingles_exploded(df: DataFrame, id_col: str, text_col: str,
     callers that must match that corner pre-filter them explicitly).
     Falls back to the JVM form for non-BIGINT id columns.
 
-    Precondition (both forms): ``id_col`` is unique per input row — the
-    window form would interleave two same-id rows' tokens into one
-    garbage document, the Arrow form would emit per-row (not per-id)
-    distinct shingles. Every caller passes a primary-keyed corpus table.
+    Precondition (both forms): ``id_col`` is unique and non-null per
+    input row — the window form would interleave two same-id rows' tokens
+    into one garbage document, the Arrow form would emit per-row (not
+    per-id) distinct shingles. Every caller passes a primary-keyed corpus
+    table. The Arrow form raises ValueError on a null id.
     """
     from pyspark.sql.types import LongType
 
@@ -224,18 +232,6 @@ def _shingles_exploded_jvm(df: DataFrame, id_col: str, text_col: str,
     return (ex.select("id", F.when(full | (C("pos") == 0), sh).alias("s"))
             .filter(C("s").isNotNull())
             .distinct())
-
-
-def minhash_signature(shingles: Column, num_hashes: int = NUM_HASHES) -> Column:
-    """k independent minhashes: min over shingles of xxhash64(shingle, seed).
-
-    xxhash64 is a Spark built-in (JVM, codegen) — the whole signature is one
-    projection, no UDF, no shuffle.
-    """
-    return F.array(*[
-        F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(i))))
-        for i in range(num_hashes)
-    ])
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -550,7 +546,7 @@ def _md5_bands_and_sets(df: DataFrame, id_col: str,
     # md5 per distinct shingle per task, not per (row × 32)); the final
     # groupBy merges partials. Bit-identical (integers; min associative),
     # pinned by tests/test_md5_sig_arrow.py, A/B in
-    # scripts/probe_md5_sig_arrow.py.
+    # 2d4da17:scripts/probe_md5_sig_arrow.py.
     sig = (sh.mapInArrow(_md5_sig_batches, _SIG_ARROW_SCHEMA)
            .groupBy("id").agg(*[
                F.min(f"h{i}").alias(f"h{i}") for i in range(NUM_HASHES)
@@ -1031,9 +1027,7 @@ def ext_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def connected_components(vertices: DataFrame, edges: DataFrame,
                          max_iter: int = 25,
-                         stats: dict | None = None,
-                         eager_cuts: bool = False,
-                         check_every: int = 1) -> DataFrame:
+                         stats: dict | None = None) -> DataFrame:
     """Connected components by iterative min-label propagation.
 
     ``vertices``: one column ``id``; ``edges``: columns ``s``, ``t``
@@ -1050,26 +1044,19 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     larger diameters switch to large-star/small-star (Kiveris '14), which
     converges in O(log n) rounds over the same primitives.
 
-    ``eager_cuts=False`` (default since r11): the cuts are lazy
-    localCheckpoints — same LogicalRDD plan barrier, but the per-round
-    materializing count() job is skipped because the convergence
-    aggregate's collect() materializes the round's blocks in ITS job
-    anyway (the same lever as pagerank's lazy cuts, graph.py; labels are
-    bit-identical — only job scheduling changes). Interleaved A/B:
-    scripts/probe_cc_lazy.py.
-
-    ``check_every`` (r12, verdict item 2): run the convergence collect()
-    only every Nth round — labels are monotone non-increasing per vertex,
-    so equal sums N rounds apart still imply every intervening round was
-    a no-op (exact detection, bit-identical labels). The trade: N-1 fewer
-    driver-synced jobs per N rounds, against up to N-1 extra (no-op, but
-    still shuffled) rounds when convergence lands between checks.
-    Measured at N=2 (scripts/probe_cc_check_every.py): the extra shuffle
-    round costs more than the saved sync at every tested tier, so the
-    default stays 1; the knob is the committed evidence.
+    The cuts are lazy localCheckpoints: the same LogicalRDD plan barrier,
+    but with no per-round materializing count() job, because the
+    convergence aggregate's collect() materializes the round's blocks in
+    its own job anyway (the same lever as pagerank's lazy cuts, graph.py;
+    labels are bit-identical, only job scheduling changes). Interleaved
+    A/B: 2d4da17:scripts/probe_cc_lazy.py. Convergence is checked every
+    round: checking every 2nd round saves a driver sync but may add a
+    no-op shuffle round, and that round cost more than the saved sync at
+    every tested tier (min-label sf0.1 2.37→2.50 s, sf1 2.58→2.82 s; star
+    4.90→5.87 s / 26.4→27.5 s; OPTIMIZATION_r12.md "Measured negatives").
     """
     def cut(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=eager_cuts)
+        return df.localCheckpoint(eager=False)
 
     # Materialize the symmetrized edge list ONCE before iterating: `edges`
     # is typically the expensive candidate-generation subtree (all-pairs /
@@ -1097,8 +1084,6 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                     .alias("comp"))
         )
         rounds += 1
-        if rounds % max(1, check_every) != 0:
-            continue  # skip this round's driver sync; see check_every note
         s = comp.agg(F.sum("comp")).collect()[0][0]
         if s == prev_sum:
             break
@@ -1110,9 +1095,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
 
 def connected_components_star(vertices: DataFrame, edges: DataFrame,
                               max_iter: int = 50,
-                              stats: dict | None = None,
-                              eager_cuts: bool = False,
-                              check_every: int = 1) -> DataFrame:
+                              stats: dict | None = None) -> DataFrame:
     """Connected components by large-star/small-star alternation
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC 2014) — the O(log n)-round algorithm for graphs whose diameter
@@ -1146,9 +1129,9 @@ def connected_components_star(vertices: DataFrame, edges: DataFrame,
     round-count separation: scripts/probe_cc_star.py).
     """
     def cut(df: DataFrame) -> DataFrame:
-        # Lazy by default (r11): the per-round fixpoint-signature collect()
-        # materializes the blocks in its own job — see connected_components.
-        return df.localCheckpoint(eager=eager_cuts)
+        # Lazy: the per-round fixpoint-signature collect() materializes
+        # the blocks in its own job — see connected_components.
+        return df.localCheckpoint(eager=False)
 
     E = cut(edges.select(C("s").alias("a"), C("t").alias("b"))
             .filter(C("a") != C("b")).distinct())
@@ -1173,11 +1156,6 @@ def connected_components_star(vertices: DataFrame, edges: DataFrame,
                 .filter(C("a") != C("b"))
                 .distinct())
         rounds += 1
-        if rounds % max(1, check_every) != 0:
-            continue  # skip this round's driver sync (see the min-label
-            #           loop's check_every note: the edge multiset is a
-            #           monotone potential, so equal signatures N rounds
-            #           apart still detect the fixpoint exactly)
         # Decimal(38,0) sums: the xxhash64 sum overflows BIGINT under
         # ANSI mode after a handful of rows; decimal accumulation is
         # exact and order-independent.

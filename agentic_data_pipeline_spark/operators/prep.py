@@ -344,9 +344,9 @@ def _curation_q_batches(it):
 
 
 def _curation_q_jvm(docs: DataFrame) -> DataFrame:
-    """The pure-Catalyst quality branch — the r11 shipped form, kept as
-    the Arrow form's equality reference (tests/test_curation_q_arrow.py)
-    and the fallback outside the ASCII regime."""
+    """The pure-Catalyst quality branch — the r11 shipped form, kept only
+    as the Arrow form's equality reference (tests/test_curation_q_arrow.py
+    pins row-for-row identity). No op routes to it."""
     from .text import quality_expr, tokens
 
     fp = F.md5(F.encode(F.lower(F.regexp_replace(C("text"), r"\s+", " ")),
@@ -390,7 +390,7 @@ def ext_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE mapInArrow pass (r12 session 2, guide §4.2 — the prep-Arrow
     # mechanism applied to the quality branch; bit-identical to
     # _curation_q_jvm, see _curation_q_batches for the step-by-step
-    # equivalence and scripts/probe_curation_q_arrow.py for the A/B).
+    # equivalence and 2d4da17:scripts/probe_curation_q_arrow.py for the A/B).
     q = (docs.filter(C("doc_id") % 50 != 0)
          .select("doc_id", "lang", "source", "text")
          .mapInArrow(_curation_q_batches,
@@ -532,8 +532,8 @@ def _prep_kept_batches(it):
     - normalize: utf8_lower → RE2 '[^a-z0-9]+'→' ' → trim → split. RE2
       is the SAME regex engine the DuckDB oracle runs (regexp_replace
       'g'), and the corpus is pure printable ASCII
-      (tests/test_lake_robustness.py pins it), so Java/RE2 lower() and
-      \\s agree by construction.
+      (tests/test_lake_robustness.py pins it), so Java and Arrow lower()
+      agree by construction.
     - md5 bucket per DISTINCT word per batch (dictionary_encode), not
       per token: md5 is pure, so hashing each distinct word once and
       fanning out through the dictionary indices is value-identical —
@@ -542,11 +542,14 @@ def _prep_kept_batches(it):
       execution, never across runs.
     - score = (sum_bigint.as_double / n - 500.0) / 500.0 in the same
       left-to-right IEEE order as the Catalyst tree → bit-identical.
-    - fp = md5(lower(\\s+→' ' collapse)) for survivors only.
+    - fp = md5(lower(ws-runs → ' ')) for survivors only, with the
+      whitespace class written out ("[ \\t\\n\\x0b\\f\\r]") as in
+      _curation_q_batches: RE2's \\s lacks the \\x0b that java's \\s+
+      in the Catalyst twin collapses.
 
     Bit-identity is pinned by tests/test_prep_arrow.py (full kept-set
     equality vs _prep_kept_jvm) and was asserted at sf0.1 AND sf10
-    (472,100 rows) by scripts/probe_prep_arrow.py before shipping."""
+    (472,100 rows) by 2d4da17:scripts/probe_prep_arrow.py before shipping."""
     import hashlib
 
     import numpy as np
@@ -606,7 +609,7 @@ def _prep_kept_batches(it):
             continue
         take = pa.array(keep)
         collapsed = pc.replace_substring_regex(
-            text.take(take), pattern=r"\s+", replacement=" ")
+            text.take(take), pattern="[ \t\n\x0b\f\r]+", replacement=" ")
         lowered = pc.utf8_lower(collapsed)
         fps = [hashlib.md5(s.encode()).hexdigest()
                for s in lowered.to_pylist()]
@@ -619,9 +622,9 @@ def _prep_kept_batches(it):
 
 def _prep_kept_jvm(docs: DataFrame) -> DataFrame:
     """The pure-Catalyst scored→kept twin of _prep_kept_batches — the r11
-    shipped form, kept as the equality reference (tests/test_prep_arrow.py
-    pins row-for-row identity every run) and as the fallback if the lake
-    ever leaves the printable-ASCII regime the Arrow form is pinned to."""
+    shipped form, kept only as the equality reference
+    (tests/test_prep_arrow.py pins row-for-row identity every run). No op
+    routes to it."""
     norm = F.trim(F.regexp_replace(F.lower(C("text")), "[^a-z0-9]+", " "))
     words = F.filter(F.split(norm, r"\s+"), lambda t: t != "")
     bucket = lambda t: (F.conv(F.substring(F.md5(t), 1, 8), 16, 10)  # noqa: E731
@@ -692,7 +695,7 @@ def ext_training_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     regexes run through RE2 — the same engine the oracle itself uses.
     Output stays bit-identical to the Catalyst form (_prep_kept_jvm;
     row-for-row equality pinned by tests/test_prep_arrow.py and asserted
-    on 472,100 sf10 rows in scripts/probe_prep_arrow.py — interleaved
+    on 472,100 sf10 rows in 2d4da17:scripts/probe_prep_arrow.py — interleaved
     A/B: sf10 32.2 → 7.31 s, sf0.1 0.64 → 0.39 s; this supersedes the
     r11 unmeasured guide-§4.2 assumption that Python dispatch would eat
     the win). Only (doc_id, text) crosses into Python and only

@@ -26,11 +26,6 @@ def hash_bucket(key: Column, buckets: int = 100) -> Column:
     return (F.conv(h8, 16, 10).cast("bigint") % buckets).cast("int")
 
 
-def deterministic_sample(df: DataFrame, key: str, rate_pct: int) -> DataFrame:
-    """Keep ~rate_pct% of rows, stably by key hash."""
-    return df.filter(hash_bucket(C(key)) < rate_pct)
-
-
 def train_val_test_split(df: DataFrame, key: str,
                          val_pct: int = 10, test_pct: int = 10) -> DataFrame:
     """Assign each row a stable split label (train/val/test)."""

@@ -156,12 +156,13 @@ def vector_search_batch(index: DataFrame, query_vec: list[float], k: int = 5,
     The big-corpus twin of vector_search: each Arrow batch is scored as one
     BLAS matrix-vector product and reduced to a per-batch top-k, so only
     k rows per batch reach the final TakeOrderedAndProject. Measured on a
-    2M x 64 synthetic corpus (scripts/probe_vector_scale.py, local[32]):
-    0.84 s vs 1.46 s for the JVM HOF fold — and the BLAS advantage grows
-    with dimension (real embedding models emit 384-1536 dims). Sims agree
-    with the fold to 6dp (both computed in float64; summation order differs
-    only in the last ulp), which is why the *oracle-checked* vector_search
-    stays on the bit-exact fold while this is the scale path.
+    2M x 64 synthetic corpus (2d4da17:scripts/probe_vector_scale.py,
+    local[32]): 0.84 s vs 1.46 s for the JVM HOF fold — and the BLAS
+    advantage grows with dimension (real embedding models emit 384-1536
+    dims). Sims agree with the fold to 6dp (both computed in float64;
+    summation order differs only in the last ulp), which is why the
+    *oracle-checked* vector_search stays on the bit-exact fold while this
+    is the scale path.
     """
     q = np.asarray(query_vec, dtype=np.float64)
     qn = float(np.linalg.norm(q))
@@ -481,10 +482,11 @@ def ann_ivf_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Driver-hashed quality floors for the ANN contracts (see _ann_contract_row).
-# Set UNDER the minimum quality measured by scripts/probe_ann_recall.py across
-# tiers (sf0.001/0.01/0.1) AND session shapes (local[4]/[8]/[32]) — MLlib
-# KMeans is seeded but partitioning-sensitive, so the bound must survive any
-# session the driver builds. Measured this round: IVF recall@5 ∈ {0.6, 0.8,
+# Set UNDER the minimum quality measured by
+# 2d4da17:scripts/probe_ann_recall.py across tiers (sf0.001/0.01/0.1) AND
+# session shapes (local[4]/[8]/[32]) — MLlib KMeans is seeded but
+# partitioning-sensitive, so the bound must survive any session the driver
+# builds. Measured this round: IVF recall@5 ∈ {0.6, 0.8,
 # 1.0}, LSH recall@5 ∈ {0.8, 1.0} over every (tier × master) combination.
 # Value-level recall stays pytest-asserted tighter.
 ANN_IVF_RECALL_FLOOR = 0.4
@@ -735,8 +737,9 @@ def ext_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     is deliberately NOT the PQ contract: on near-random vectors pairwise
     distances concentrate, so 16⁸-code ADC recall is legitimately ~0
     while its returned points are still nearly as close as the true
-    top-5 (measured c² ≤ 1.33 everywhere; see probe_ann_recall.py) —
-    recall would either be vacuous or flaky, c-approximation is neither.
+    top-5 (measured c² ≤ 1.33 everywhere; see
+    2d4da17:scripts/probe_ann_recall.py) — recall would either be vacuous
+    or flaky, c-approximation is neither.
     The DuckDB twin recomputes the exact kth distance² and asserts
     approx_ok TRUE, so a codebook collapse (which sends c² to the sky)
     fails the driver hash."""
@@ -1262,9 +1265,10 @@ def knn_graph_batch(emb: DataFrame, k: int = 3, block_col: str = "label",
 
     WHY: the HOF-fold pair join evaluates the dot product interpreted,
     per element (~2M pairs/s on 32 cores measured at the 64k probe —
-    probe_r4_ops); the matmul path does the same pair count in BLAS at
-    memory bandwidth. Same one-shuffle-on-block-key plan; the quadratic-
-    within-block law is unchanged — this moves the constant ~50×.
+    2d4da17:scripts/probe_r4_ops.py); the matmul path does the same pair
+    count in BLAS at memory bandwidth. Same one-shuffle-on-block-key
+    plan; the quadratic-within-block law is unchanged — this moves the
+    constant ~50×.
     Per-block memory is O(block²) doubles, which is the same bound the
     blocked join's shuffle partition already carries.
     """

@@ -419,8 +419,9 @@ def stream_dedup_fuzzy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: this is the real continuous-ingest topology — the band
     index is the state a production job persists (here: block-manager
     checkpoints; in production: a Delta/parquet table appended per
-    batch); per-batch cost tracks the batch (probe_incremental_fuzzy.py
-    measures it flat under 16× corpus growth).
+    batch); per-batch cost tracks the batch
+    (2d4da17:scripts/probe_incremental_fuzzy.py measures it flat under 16×
+    corpus growth).
     """
     import uuid as _uuid
 

@@ -178,10 +178,10 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     them map-side shrinks BOTH sides of the exchange — the old shape
     shuffled the full 60M-row fact first and dropped 5/6 of it after
     (r11 interleaved A/B, results identical: sf10 8.47 s → 3.03 s;
-    probe_q58_reorder.py). The share is a conditional-sum / total-sum
-    ratio computed in one hash-agg pass over exact cents, so the division
-    is the only floating step and it divides identical BIGINT-derived
-    doubles in both engines.
+    2d4da17:scripts/probe_q58_reorder.py). The share is a conditional-sum
+    / total-sum ratio computed in one hash-agg pass over exact cents, so
+    the division is the only floating step and it divides identical
+    BIGINT-derived doubles in both engines.
 
     r11 narrow-exchange pass (guide §2.3): the revenue product folds to
     one BIGINT and the supplier-nation name to an is-NATION_1 BOOLEAN
@@ -189,7 +189,8 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE the lineitem exchange; the orders side ships the year BIGINT
     instead of the timestamp. The exchange carries (orderkey, rev_c,
     is_n1) ≈ 17 B/row instead of (orderkey, 2 DECIMALs, STRING) ≈ 40.
-    sf10 2.49 → 2.22 s, rows identical (probe_narrow_exchange.py).
+    sf10 2.49 → 2.22 s, rows identical
+    (2d4da17:scripts/probe_narrow_exchange.py).
     """
     region = (load_table(spark, sf_dir, "region")
               .filter(C("r_name") == "ASIA").select("r_regionkey"))
@@ -272,9 +273,10 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orderkey, nationkey, profit_c4) ≈ 20 B/row instead of six 8-byte
     columns ≈ 48; the aggregate groups on the integer nationkey and the
     25-row name map re-attaches AFTER it as a broadcast. sf10
-    2.75 → 2.60 s, rows identical (probe_narrow_exchange.py) — the
-    residual vs the twin stays the exchange dispatch tax decomposed in
-    BASELINE.md (r10 q9 exoneration), now on 2.4× fewer bytes.
+    2.75 → 2.60 s, rows identical
+    (2d4da17:scripts/probe_narrow_exchange.py) — the residual vs the twin stays
+    the exchange dispatch tax decomposed in BASELINE.md (r10 q9 exoneration),
+    now on 2.4× fewer bytes.
     """
     part = (load_table(spark, sf_dir, "part")
             .filter(C("p_name").like("%widget%"))
@@ -379,7 +381,7 @@ def q12_priority_by_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     `high` BOOLEAN BEFORE the orders-side exchange (guide §2.3 — the
     aggregate only ever tests membership in the high set, so ~10 bytes
     of string per row never cross the wire; sf10 2.02 → 1.94 s, rows
-    identical, probe_narrow_exchange.py).
+    identical, 2d4da17:scripts/probe_narrow_exchange.py).
     """
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate",
@@ -662,10 +664,10 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     output — at sf10 orders is ~7M rows, does NOT broadcast, and that
     shape shuffled the fact-sized join output a second time (r11
     interleaved A/B, identical rows: sf10 min 8.3 s → 6.08 s, better in
-    every pass — probe_q421_rewrite.py). Two hash aggregates replace
-    the r2 version's aggregate + two-function window: no per-partition
-    sort, and the order grain (≪ line grain) feeds the final broadcast
-    join.
+    every pass — 2d4da17:scripts/probe_q421_rewrite.py). Two hash
+    aggregates replace the r2 version's aggregate + two-function window:
+    no per-partition sort, and the order grain (≪ line grain) feeds the
+    final broadcast join.
     """
     orders = (load_table(spark, sf_dir, "orders")
               .filter(C("o_orderstatus") == "F")

@@ -81,6 +81,7 @@ _FN_REWRITES: list[tuple[re.Pattern[str], object]] = [
 # (ANSI); CURRENT_TABLE resolves via the temp view, not string surgery.
 
 _MD_FENCE = re.compile(r"^```(?:sql)?\s*|\s*```$", re.I | re.M)
+_TRAILING_TERMINATORS = re.compile(r"[\s;]+\Z")
 
 
 def strip_markdown_fences(sql: str) -> str:
@@ -195,7 +196,10 @@ def duckdb_to_spark_sql(sql: str) -> str:
     for pat, repl in _FN_REWRITES:
         out = pat.sub(repl, out)
     out = rewrite_list_literals(out)
-    return out
+    # Trim what the steps above leave at the ends: strip_markdown_fences
+    # drops only one ';' layer ('0 ;' → '0 ') and a rewrite can pad an
+    # edge ('//' → ' div '). Without this a second rewrite is not a no-op.
+    return _TRAILING_TERMINATORS.sub("", out).lstrip()
 
 
 def sql_exec(spark: SparkSession, query: str, df: DataFrame | None = None,

@@ -141,11 +141,11 @@ BLOOM_MIN_FACT_ROWS = 10_000_000
 # dominates: lineitem keeps its 32 splits either way). Like the bloom
 # ratchet this FOLLOWS DATA VOLUME: at the dispatch-bound sf0.1 tier
 # extra scan tasks are pure scheduling overhead (r11
-# probe_scan_minpartitions.py measured the wash), so the default stays
-# stock and the floor applies only past the declared-volume gate.
-# Measured (scripts/probe_scan_parallelism.py, sf10, interleaved min-of-3,
-# rows identical): prep 7.42→3.27 s, curation 24.2→12.5, chunks
-# 20.0→8.0, dedup_exact 3.67→1.63, text_stats 7.76→2.89. On a real
+# 2d4da17:scripts/probe_scan_minpartitions.py measured the wash), so the
+# default stays stock and the floor applies only past the declared-volume
+# gate. Measured (2d4da17:scripts/probe_scan_parallelism.py, sf10,
+# interleaved min-of-3, rows identical): prep 7.42→3.27 s, curation 24.2→12.5,
+# chunks 20.0→8.0, dedup_exact 3.67→1.63, text_stats 7.76→2.89. On a real
 # cluster the deployment sets its own split sizing; SPARK_GRAFT_EXTRA_CONFS
 # overrides this one like any other conf.
 SCAN_OPEN_COST_FLOOR_BYTES = 64 * 1024

@@ -120,39 +120,45 @@ SET_VERSION = "v2"
 PERF_EPOCH = "r12c"  # r12c: curation quality branch through one
                      # mapInArrow pass (explicit java-\s classes in RE2,
                      # identical IEEE double tree, survivor-only md5;
-                     # probe_curation_q_arrow.py, 490k survivors checksum-
-                     # identical: sf10 branch 1.46->0.96 / full op
-                     # 10.4->8.8 interleaved; sf0.1 0.44->0.33 / 1.13->1.07).
+                     # 2d4da17:scripts/probe_curation_q_arrow.py, 490k
+                     # survivors checksum-identical: sf10 branch
+                     # 1.46->0.96 / full op 10.4->8.8 interleaved; sf0.1
+                     # 0.44->0.33 / 1.13->1.07).
                      # Supersedes:
                      # r12b: vectorized Arrow shingle generator — the
                      # mapInArrow body builds every window string in C++
                      # (binary_join_element_wise over shifted flat-token
                      # slices) and does per-doc distinct+sort via
                      # dictionary rank + np.unique, zero per-row Python
-                     # (probe_shingles_vectorized.py, checksums identical:
-                     # sf10 curation 6.60->4.70, decontaminate 7.55->4.74;
-                     # sf0.1 curation 1.51->1.21, minhash_md5 3.06->2.60).
+                     # (2d4da17:scripts/probe_shingles_vectorized.py,
+                     # checksums identical: sf10 curation 6.60->4.70,
+                     # decontaminate 7.55->4.74; sf0.1 curation
+                     # 1.51->1.21, minhash_md5 3.06->2.60).
                      # Supersedes:
                      # r12a: Arrow front-end for the training-prep
                      # scored→kept pass (md5 per DISTINCT word per batch
                      # via dictionary_encode + RE2 normalize; bit-identical,
-                     # probe_prep_arrow.py: sf10 32.2->7.31 s, sf0.1
-                     # 0.644->0.386) and the volume-gated scan-split
-                     # open-cost floor + v3 tier-lake row-group layout
-                     # (probe_scan_parallelism.py: corpus scans were
-                     # starved to 2-5 tasks at sf10; text family 2-2.7x).
+                     # 2d4da17:scripts/probe_prep_arrow.py: sf10
+                     # 32.2->7.31 s, sf0.1 0.644->0.386) and the
+                     # volume-gated scan-split open-cost floor + v3
+                     # tier-lake row-group layout
+                     # (2d4da17:scripts/probe_scan_parallelism.py: corpus
+                     # scans were starved to 2-5 tasks at sf10; text
+                     # family 2-2.7x).
                      # Supersedes:
                      # r11e: corpus norm below the batch-query joins
                      # (ext_similarity_topk sf10 5.26->3.86, ext_ann_int8
-                     # 5.69->4.46; probe_simtopk_norm.py) and q14's
-                     # promo-subset broadcast flag join (sf10 1.83->0.84;
-                     # probe_q14_promo.py). Supersedes:
+                     # 5.69->4.46; 2d4da17:scripts/probe_simtopk_norm.py)
+                     # and q14's promo-subset broadcast flag join (sf10
+                     # 1.83->0.84; 2d4da17:scripts/probe_q14_promo.py).
+                     # Supersedes:
                      # r11d: narrow-exchange pass on q3/q5/q7/q8/q9/q10/
                      # q12 — revenue/profit products fold to one BIGINT
                      # and 1:1 strings to integer codes BEFORE the fact
                      # exchange, q9's supplier/nation dims move to the
                      # map side, q10's fact-sized orders side gets the
-                     # shuffle-hash hint (probe_narrow_exchange.py, sf10
+                     # shuffle-hash hint
+                     # (2d4da17:scripts/probe_narrow_exchange.py, sf10
                      # mins: q3 2.59->2.32, q5 3.72->3.51, q7 2.39->1.89,
                      # q8 2.49->2.22, q9 2.75->2.60, q10 3.60->2.53,
                      # q12 2.02->1.94; rows identical). Supersedes r11c

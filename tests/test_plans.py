@@ -302,7 +302,7 @@ HEADLINE_MAX_SHUFFLES = {
     # broadcasts (it doesn't past sf1) and re-shuffling the LINE-grain
     # join output; the third exchange now carries the ~4x-smaller order
     # grain instead — node count up, exchange bytes down (sf10 A/B
-    # 8.3->6.08 s, probe_q421_rewrite.py).
+    # 8.3->6.08 s, 2d4da17:scripts/probe_q421_rewrite.py).
     "q21_waiting_suppliers": 3,
     "ext_curation_pipeline": 5,  # composed multi-stage pipeline
 }
@@ -326,12 +326,14 @@ def test_curation_pipeline_shape_r3(spark):
     assert "min_by" in p and "partial_min_by" in p
     # r12: the shingle constructions are per-doc Arrow generators inside
     # the scan task — the two Window(+exchange) subtrees are gone
-    # entirely (plans/r12/ext_curation_pipeline_*; probe_shingles_arrow.py)
+    # entirely (plans/r12/ext_curation_pipeline_*;
+    # 2d4da17:scripts/probe_shingles_arrow.py)
     assert p.count("Window (") == 0
     assert "MapInArrow" in p
-    # row-at-a-time Python never allowed; MapInArrow is the only
-    # sanctioned Python boundary (guide §4.2)
+    # no Python UDF evaluation (row-at-a-time or Arrow-vectorized);
+    # MapInArrow is the only sanctioned Python boundary (guide §4.2)
     assert "BatchEvalPython" not in p
+    assert "ArrowEvalPython" not in p
 
 
 def test_skew_report_is_two_phase_agg(spark):

@@ -4,7 +4,7 @@ the parts where a single wrong edge case silently breaks oracle parity."""
 import math
 import re
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from agentic_data_pipeline_spark.plans.dialect import (
@@ -26,6 +26,8 @@ def test_fence_stripping_roundtrip(sql):
 
 
 @given(sql_text)
+@example("0\r;")   # whitespace before the ';' strip_markdown_fences drops
+@example("//")     # rewrite pads the edges: ' div '
 @settings(max_examples=100, deadline=None)
 def test_dialect_shim_idempotent_on_sparkish_sql(sql):
     """Rewriting twice == rewriting once for text without DuckDB-isms."""

@@ -4,13 +4,15 @@ distinct (id, s) set the r8→r11 window form produces, for both the
 n=3 (minhash family) and n=8 (decontamination/curation) geometries —
 including the short-document (< n tokens) and zero-token corners."""
 
+import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
 
 from agentic_data_pipeline_spark.catalog import load_table
 from agentic_data_pipeline_spark.operators.dedup import (
-    _shingles_exploded_jvm, shingles_exploded,
+    _shingle_batches, _shingles_exploded_jvm, shingles_exploded,
 )
 
 
@@ -61,3 +63,12 @@ def test_shingles_non_bigint_id_falls_back(spark):
     df = spark.createDataFrame([("k1", "a b c d")], "k string, text string")
     out = sorted(map(tuple, shingles_exploded(df, "k", "text", 3).collect()))
     assert out == [("k1", "a b c"), ("k1", "b c d")]
+
+
+def test_shingles_arrow_rejects_null_id():
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([1, None], type=pa.int64()),
+         pa.array(["a b c d", "e f g h"])],
+        names=["id", "text"])
+    with pytest.raises(ValueError, match="null id"):
+        list(_shingle_batches(3)(iter([batch])))
