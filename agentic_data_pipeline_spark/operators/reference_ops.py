@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..agent import TransformationAgent
-from ..catalog import load_table
+from ..catalog import load_table, path_fingerprint, table_path
 from ..plans.dialect import sql_exec
 from ..registry import op
 from ..serving import bar_chart_data, preview, serve_csv, serve_json
@@ -42,15 +42,18 @@ def _sf_scratch(sf_dir: str, *parts: str) -> str:
 
 def _lake_fp(sf_dir: str, *tables: str) -> str:
     """Fingerprint of the source parquet(s) feeding a scratch write:
-    mtime_ns + size per file. The lake is regenerated between rounds under
-    the SAME paths (events.ts schema flipped once already), so cached
-    scratch keyed on basename alone would silently serve stale prior-round
-    bytes while the DuckDB oracle reads the fresh lake."""
+    catalog.path_fingerprint per table, so a directory table counts every
+    part file. The lake is regenerated between rounds under the SAME paths
+    (events.ts schema flipped once already), so cached scratch keyed on
+    basename alone would silently serve stale prior-round bytes while the
+    DuckDB oracle reads the fresh lake. A missing table raises."""
     parts = []
     for t in tables:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        st = os.stat(p)
-        parts.append(f"{t}:{st.st_mtime_ns}:{st.st_size}")
+        p = table_path(sf_dir, t)
+        fp = path_fingerprint(p)
+        if fp is None:
+            raise FileNotFoundError(p)
+        parts.append(f"{t}:{fp}")
     return ";".join(parts)
 
 

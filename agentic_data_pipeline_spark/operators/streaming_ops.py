@@ -14,7 +14,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table_path
+from ..catalog import load_table, read_files, table_path
 from ..registry import op
 
 C = F.col
@@ -129,7 +129,6 @@ def stream_dedup_watermark_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static dimension enrichment: event stream joined to broadcast
     customer→nation dims, aggregated per (nation, event_type)."""
-    from ..catalog import load_table
     from ..streaming.windows import run_to_memory, stream_static_enrich
 
     table = f"stream_join_{uuid.uuid4().hex[:8]}"
@@ -193,7 +192,6 @@ def _wm_flush_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     like the other stream fixtures."""
     import shutil
 
-    from ..catalog import load_table
     from .reference_ops import _lake_fp, _materialize_once, _sf_scratch
 
     path = _sf_scratch(sf_dir, "stream_wm_flush", "events")
@@ -304,7 +302,6 @@ def _split_stream_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str
     maxFilesPerTrigger=1 yields n genuine micro-batches (the single-file
     symlink dir gives one batch, which would make an upsert test vacuous).
     Lake-fingerprinted like the ingest scratch (regenerated lake → rebuild)."""
-    from ..catalog import load_table
     from .reference_ops import _lake_fp, _materialize_once, _sf_scratch
 
     path = _sf_scratch(sf_dir, "stream_split", f"events_{n_files}")
@@ -356,7 +353,8 @@ def stream_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                            uuid.uuid4().hex[:8])
     os.makedirs(run_dir, exist_ok=True)
 
-    batch_schema = spark.read.parquet(split).schema  # footer only
+    # one inference job (footer sniff) per unchanged split directory
+    batch_schema = read_files(spark, "parquet", split).schema
     stream = (spark.readStream.schema(batch_schema)
               .option("maxFilesPerTrigger", "1").parquet(split))
     stream = stream.withColumn("ts_us", ts_us_long(stream))
@@ -453,7 +451,7 @@ def stream_dedup_fuzzy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _materialize_once(src, write_src, _lake_fp(sf_dir, "documents"))
 
-    schema = spark.read.parquet(f"{src}/batch0.parquet").schema
+    schema = read_files(spark, "parquet", f"{src}/batch0.parquet").schema
     state: dict = {}
     decisions: list = []
 
@@ -581,20 +579,18 @@ def stream_quality_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     C = F.col
     split = _sf_scratch(sf_dir, "stream_gate", "orders_4")
-    orders_path = table_path(sf_dir, "orders")
     _materialize_once(
         split,
-        lambda: spark.read.parquet(orders_path)
+        lambda: load_table(spark, sf_dir, "orders")
         .repartitionByRange(4, "o_orderkey")
         .write.mode("overwrite").parquet(split),
         _lake_fp(sf_dir, "orders"))
 
-    customer = (spark.read.parquet(table_path(sf_dir, "customer"))
-                .select("c_custkey"))
+    customer = load_table(spark, sf_dir, "customer").select("c_custkey")
     run_dir = os.path.join("/root/repo/.tmp", "stream_gate",
                            _uuid.uuid4().hex[:8])
     os.makedirs(run_dir, exist_ok=True)
-    schema = spark.read.parquet(split).schema
+    schema = read_files(spark, "parquet", split).schema
     state = {"counters": None, "keys": None}
 
     def gate_batch(bdf: DataFrame, batch_id: int) -> None:

@@ -13,6 +13,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ..catalog import read_files
 from ..session import tune
 
 
@@ -44,7 +45,8 @@ def read_bronze(spark: SparkSession, lake_dir: str, name: str,
     tune(spark)
     path = bronze_path(lake_dir, name)
     try:
-        reader = spark.read.schema(schema) if schema is not None else spark.read
-        return reader.parquet(path)
+        if schema is None:
+            return read_files(spark, "parquet", path)
+        return spark.read.schema(schema).parquet(path)
     except Exception:
         return spark.createDataFrame([], schema=schema or StructType([]))

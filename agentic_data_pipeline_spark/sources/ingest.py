@@ -6,7 +6,9 @@ RuntimeError — never an empty DataFrame (engine.py:34-37).
 
 Scale design:
 - csv/json/parquet go through distributed `spark.read` (splittable sources,
-  schema inference optional, predicate pushdown for parquet).
+  schema inference optional, predicate pushdown for parquet). Without a
+  ``schema`` they read through catalog.read_files, so an unchanged file's
+  schema is inferred once, not on every ingest.
 - excel has no distributed reader anywhere in the Spark ecosystem worth its
   deps; files are interactive-upload sized by construction (reference
   app.py:84), so driver-side pandas → createDataFrame is the honest choice.
@@ -28,6 +30,7 @@ from pyspark.sql.types import (
     IntegerType, StringType, StructField, StructType,
 )
 
+from ..catalog import read_files
 from ..session import tune
 
 
@@ -43,23 +46,17 @@ PDF_PAGE_SCHEMA = StructType([
 
 
 def _read_csv(spark: SparkSession, path: str, schema, options: dict) -> DataFrame:
-    reader = spark.read.option("header", "true")
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.csv(path)
+    if schema is None:
+        return read_files(spark, "csv", path,
+                          {"header": "true", "inferSchema": "true", **options})
+    return (spark.read.option("header", "true").schema(schema)
+            .options(**options).csv(path))
 
 
 def _read_json(spark: SparkSession, path: str, schema, options: dict) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.json(path)
+    if schema is None:
+        return read_files(spark, "json", path, options)
+    return spark.read.schema(schema).options(**options).json(path)
 
 
 def _read_excel(spark: SparkSession, path: str, schema, options: dict) -> DataFrame:
@@ -125,12 +122,12 @@ _READERS = {
     "pdf": _read_pdf,
     "parquet": lambda spark, path, schema, options: (
         spark.read.schema(schema).parquet(path) if schema is not None
-        else spark.read.parquet(path)
+        else read_files(spark, "parquet", path)
     ),
     # Beyond-reference formats Spark reads natively (same dispatch contract).
     "orc": lambda spark, path, schema, options: (
         spark.read.schema(schema).orc(path) if schema is not None
-        else spark.read.orc(path)
+        else read_files(spark, "orc", path)
     ),
     "text": lambda spark, path, schema, options: spark.read.text(path),
     # Spark 4 ships the (formerly spark-xml) XML datasource natively; rowTag
@@ -139,8 +136,7 @@ _READERS = {
     "xml": lambda spark, path, schema, options: (
         spark.read.options(**{"rowTag": "row", **options})
         .schema(schema).format("xml").load(path) if schema is not None
-        else spark.read.options(**{"rowTag": "row", **options})
-        .format("xml").load(path)
+        else read_files(spark, "xml", path, {"rowTag": "row", **options})
     ),
 }
 

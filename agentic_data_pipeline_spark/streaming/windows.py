@@ -40,11 +40,13 @@ def events_stream(spark: SparkSession, input_dir: str,
     (catalog.ts_us_timestamp), so stream ops never care which variant
     shipped.
     """
-    from ..catalog import ts_us_timestamp
+    from ..catalog import read_files, ts_us_timestamp
 
     tune(spark)  # nanosAsLong must be set before the footer sniff
-    batch = spark.read.parquet(input_dir)  # footer read only — no job runs
-    stream = spark.readStream.schema(batch.schema).parquet(input_dir)
+    # the footer sniff is a Spark job; read_files runs it once per unchanged
+    # input directory
+    schema = read_files(spark, "parquet", input_dir).schema
+    stream = spark.readStream.schema(schema).parquet(input_dir)
     if raw:
         return stream
     return stream.withColumn("ts_us", ts_us_timestamp(stream))

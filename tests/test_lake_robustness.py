@@ -69,6 +69,18 @@ def test_lake_fp_changes_with_mtime(tmp_path):
     src.write_bytes(b"v2-regenerated")   # new size + mtime
     assert _lake_fp(str(tmp_path), "events") != fp1
 
+    # a directory table whose part file is rewritten in place (here with an
+    # added column): the directory's own mtime does not move
+    lake = tmp_path / "dir_lake"
+    part = lake / "events.parquet" / "part-0.parquet"
+    part.parent.mkdir(parents=True)
+    pq.write_table(pa.table({"k": [1, 2]}), str(part))
+    fp1 = _lake_fp(str(lake), "events")
+    dir_mtime = os.stat(part.parent).st_mtime_ns
+    pq.write_table(pa.table({"k": [1, 2], "v": ["a", "b"]}), str(part))
+    assert os.stat(part.parent).st_mtime_ns == dir_mtime
+    assert _lake_fp(str(lake), "events") != fp1
+
 
 # ------------------------------------------------- nanos-lake stream read
 
