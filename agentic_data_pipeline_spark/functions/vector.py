@@ -39,8 +39,8 @@ def l2_norm(a: Column) -> Column:
 # 0.12 s vs 0.076 s, full cosine top-k 0.25 s vs 0.13 s steady-state. The
 # wide expression tree costs more than the per-element lambda dispatch
 # saves (and getItem on a non-attribute array re-evaluates its child per
-# term). Keep the fold; the genuinely faster big-corpus path is the
-# Arrow/numpy vector_search_batch (operators/similarity.py).
+# term). Keep the fold: it is also the summation order the DuckDB
+# oracle's list_dot_product uses, so query top-k sims stay bit-identical.
 
 
 def cosine_sim(a: Column, b: Column) -> Column:

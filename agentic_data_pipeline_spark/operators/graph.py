@@ -151,10 +151,8 @@ def ext_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest additionally pins every rank against a pure-Python iteration
     at 1e-9 (tests/test_pagerank.py).
 
-    Edges come from the BLAS kNN twin (ext_knn_graph_batch) — the scale
-    path for graph construction; it shares ext_knn_graph's oracle and its
-    edge list is pytest-pinned identical to the JVM fold's, so the rank
-    oracle is unaffected by the choice."""
+    Edges come from ext_knn_graph_batch, the same body and oracle as
+    ext_knn_graph (similarity.knn_graph_batch)."""
     from ..registry import OPS
 
     edges = (OPS["ext_knn_graph_batch"].fn(spark, sf_dir)

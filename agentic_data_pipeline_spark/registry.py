@@ -67,8 +67,10 @@ def op(op_id: str, oracle: str | None = None, tags: tuple[str, ...] = (),
 # ordering is GENERATED each round by
 # `python scripts/evidence_rotation.py --priority` (r8 verdict items 2-3:
 # FUNCTION-granular staleness via git log -L): ops whose own def changed
-# after their last driver row lead (r12 head: the six ops whose PLANS the
-# r12 Arrow rewrites changed — curation/decontaminate/the md5-LSH twins
+# after their last driver row lead. Current head: the exact-cosine ops
+# whose bodies were merged (each fold/BLAS id pair now runs one body, and
+# the label-blocked pair join is shared), then the six ops whose PLANS
+# the r12 Arrow rewrites changed — curation/decontaminate/the md5-LSH twins
 # via the shingle generator, prep's scored→kept pass, q5's name-attach
 # trim; curation/the LSH twins are promoted manually because their defs
 # are unchanged — the generator can't see a cross-function dep through
@@ -80,6 +82,17 @@ def op(op_id: str, oracle: str | None = None, tags: tuple[str, ...] = (),
 # so the budget window is spent entirely on oracle-checkable rows
 # (scripts/driver_preflight.py asserts this).
 DRIVER_PRIORITY: tuple[str, ...] = (
+    "ext_dedup_components",
+    "ext_dedup_components_star",
+    "ext_dedup_embedding",
+    "ext_knn_graph",
+    "ext_knn_graph_batch",
+    "ext_similarity_topk",
+    "ext_similarity_topk_batch",
+    "vector_search",
+    "vector_search_batch",
+    "vector_index",
+    "ext_embed_word2vec",
     "ext_curation_pipeline",
     "ext_decontaminate",
     "ext_training_prep_pipeline",
@@ -92,17 +105,14 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "ext_bm25_search",
     "ext_contrastive_triplets",
     "ext_decontaminate_embedding",
-    "ext_dedup_components_star",
     "ext_dedup_incremental_fuzzy",
     "ext_dedup_substring",
-    "ext_embed_word2vec",
     "ext_embedding_quantize",
     "ext_heavy_hitters",
     "ext_hybrid_search",
     "ext_image_dedup_ahash",
     "ext_k_anonymity",
     "ext_resize_png",
-    "ext_similarity_topk_batch",
     "ext_triangle_count",
     "ext_video_dedup_scenehash",
     "ext_video_frames",
@@ -124,7 +134,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "ext_bpe_encode",
     "ext_bpe_merges",
     "ext_chunk_overlap",
-    "ext_dedup_components",
     "ext_dedup_exact",
     "ext_dedup_passage",
     "ext_dedup_resolve",
@@ -156,18 +165,14 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "ext_multimodal",
     "ext_pdf_corpus",
     "ext_pmi_bigrams",
-    "ext_dedup_embedding",
     "ext_dp_mean",
     "ext_gopher_filters",
     "ext_inverted_index",
     "ext_k_anonymity_enforce",
     "ext_kmeans_clusters",
-    "ext_knn_graph_batch",
     "q13_order_distribution",
     "q22_dormant_customers",
     "q2_min_cost_supplier",
-    "vector_index",
-    "vector_search_batch",
     "ext_data_profile",
     "ext_domain_mix",
     "ext_histogram_rollup",
@@ -206,7 +211,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "ext_dedup_clusters_bounded",
     "ext_dedup_containment",
     "ext_dedup_ngram",
-    "ext_knn_graph",
     "ext_pseudonymize",
     "ext_quality_classifier",
     "ext_repetition",
@@ -214,7 +218,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "q11_important_parts",
     "q20_promotion_suppliers",
     "q6_forecast_revenue",
-    "vector_search",
     "ext_bucketed_join",
     "ext_cdc_changelog",
     "ext_corpus_stats",
@@ -273,7 +276,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "ext_semdedup_contract",
     "ext_sessionize",
     "ext_shard_assign",
-    "ext_similarity_topk",
     "ext_temperature_sample",
     "ext_upsample_repeat",
     "ingest_json_multiline",

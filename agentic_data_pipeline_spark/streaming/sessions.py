@@ -118,98 +118,3 @@ def run_sessionize_to_table(spark: SparkSession, input_dir: str,
 
     run_to_memory(stream_sessionize(spark, input_dir), table,
                   output_mode="append")
-
-
-# --- transformWithState port (r6 verdict item 7) ----------------------
-# Spark 4's successor API for custom stateful operators: typed state
-# primitives (value/list/map), timers with TTL, and a RocksDB-backed
-# store. The port below is complete and pytest-covered, but BLOCKED in
-# this container: TransformWithStateInPySpark drives its state protocol
-# over protobuf and `google.protobuf` is not installed (import error
-# recorded in BASELINE.md; no pip installs in this environment). The
-# test gates on the import and runs the moment the environment gains
-# protobuf; until then applyInPandasWithState (above) remains the
-# production path, and both produce the same sessions by construction.
-
-def tws_available() -> bool:
-    """True iff transformWithStateInPandas can actually run here (its
-    streaming Python runner imports google.protobuf at startup)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-
-
-def _make_session_processor():
-    """Build the StatefulProcessor class lazily (the import is cheap and
-    always succeeds; only the RUNNER needs protobuf)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle,
-    )
-
-    class SessionProcessor(StatefulProcessor):
-        """Same session semantics as _sessionize_group, on typed state:
-        one ValueState (last_ts_us, session_id) per user."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("sess", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            (user_id,) = key
-            if self._state.exists():
-                last_ts, session_id = self._state.get()
-            else:
-                last_ts, session_id = None, 0
-            chunks = list(rows)
-            if not chunks:
-                return
-            pdf = pd.concat(chunks, ignore_index=True).sort_values("ts_us")
-            sess: dict[int, list] = {}
-            for ts_us, value in zip(pdf["ts_us"], pdf["value"]):
-                ts_us = int(ts_us)
-                if last_ts is None or ts_us - last_ts > SESSION_GAP_US:
-                    session_id += 1
-                    sess[session_id] = [ts_us, 0, 0]
-                elif session_id not in sess:
-                    sess[session_id] = [None, 0, 0]
-                s = sess[session_id]
-                s[1] += 1
-                s[2] += int(round(float(value) * 100))
-                last_ts = ts_us
-            self._state.update((last_ts, session_id))
-            out = [(user_id, sid,
-                    None if start is None else start // 1_000_000,
-                    n, cents / 100.0)
-                   for sid, (start, n, cents) in sess.items()]
-            yield pd.DataFrame(
-                out, columns=[f.name for f in SESSION_SCHEMA.fields])
-
-        def close(self) -> None:
-            pass
-
-    return SessionProcessor()
-
-
-def stream_sessionize_tws(spark: SparkSession, input_dir: str) -> DataFrame:
-    """transformWithStateInPandas twin of stream_sessionize. Requires the
-    RocksDB state store (the only provider the TWS operator supports) and
-    a protobuf-capable Python env (see tws_available)."""
-    from .windows import events_stream
-
-    tune(spark)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    stream = (
-        events_stream(spark, input_dir)
-        .withColumn("ts_us", F.unix_micros(F.col("ts_us")))
-        .select("user_id", "ts_us", "value")
-    )
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_make_session_processor(),
-        outputStructType=SESSION_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )

@@ -97,24 +97,6 @@ def test_ann_ivf_recall_vs_exact(spark):
     assert (row.k, row.n_ann, row.recall_ok) == (5, 5, True), row
 
 
-def test_vector_search_batch_matches_exact(spark):
-    """The numpy/mapInPandas scale path must return the same neighbors and
-    6dp-identical sims as the oracle-checked JVM fold."""
-    from agentic_data_pipeline_spark.catalog import load_table
-    from agentic_data_pipeline_spark.operators.similarity import (
-        vector_search, vector_search_batch,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    emb = load_table(spark, sf, "embeddings")
-    qv = list(emb.filter(F.col("vec_id") == 0).head()["embedding"])
-    exact = [(r["vec_id"], round(r["sim"], 6))
-             for r in vector_search(emb, qv, k=5).collect()]
-    batch = [(r["vec_id"], round(r["sim"], 6))
-             for r in vector_search_batch(emb, qv, k=5).collect()]
-    assert exact == batch
-
-
 def test_ann_pq_recall_vs_exact(spark):
     """PQ/ADC approx top-5 should overlap with exact top-5 (weak-structure
     fixture: partial recall expected, exact distances are quantized away)."""
@@ -301,21 +283,6 @@ def test_resize_payload_md5_matches_reference_slice(spark):
         ref = texts[r["asset_id"]].encode()[:n].ljust(n, b"\0")
         assert r["media_md5"] == hashlib.md5(ref).hexdigest(), r["asset_id"]
         assert r["n_bytes"] == n
-
-
-def test_similarity_topk_batch_matches_jvm_path(spark):
-    """The BLAS multi-query top-k must return the same neighbors and
-    6dp-identical sims as the oracle-checked salted JVM path."""
-    from agentic_data_pipeline_spark.operators.similarity import (
-        ext_similarity_topk, ext_similarity_topk_batch,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    jvm = sorted((r["query_id"], r["neighbor_id"], round(r["sim"], 6))
-                 for r in ext_similarity_topk(spark, sf).collect())
-    blas = sorted((r["query_id"], r["neighbor_id"], round(r["sim"], 6))
-                  for r in ext_similarity_topk_batch(spark, sf).collect())
-    assert jvm == blas
 
 
 def test_word2vec_train_vocab_and_determinism(spark, sf_dir):

@@ -44,6 +44,15 @@ def test_vector_search_is_jvm_only_topk(spark):
     assert "EvalPython" not in p                      # no Python in hot path
 
 
+@pytest.mark.parametrize("op_id", ["vector_search_batch",
+                                   "ext_similarity_topk_batch"])
+def test_query_topk_ids_have_no_python_stage(spark, op_id):
+    """Both query top-k ids run the JVM fold: no Python node of any kind."""
+    p = plan_of(spark, op_id)
+    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+        assert node not in p, (op_id, node)
+
+
 def test_text_ops_have_no_python_stage(spark):
     for op_id in ("ext_text_stats", "ext_token_count", "ext_fingerprint",
                   "ext_dedup_minhash"):

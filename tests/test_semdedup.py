@@ -63,22 +63,6 @@ def test_semdedup_kept_set_is_pairwise_below_threshold_with_lower_ids(spark, sf_
         assert sim <= 0.35 + 1e-9, (r["a_id"], r["b_id"], sim)
 
 
-def test_knn_graph_batch_matches_jvm_twin(spark, sf_dir):
-    """The BLAS applyInPandas kNN must produce the identical edge list
-    (and 6dp sims/ranks) as the oracle-checked JVM pair-join path."""
-    from agentic_data_pipeline_spark.registry import OPS, _ensure_loaded
-
-    _ensure_loaded()
-    jvm = {(r["vec_id"], r["neighbor_id"]): (r["sim"], r["rank"])
-           for r in OPS["ext_knn_graph"].fn(spark, sf_dir).collect()}
-    blas = {(r["vec_id"], r["neighbor_id"]): (r["sim"], r["rank"])
-            for r in OPS["ext_knn_graph_batch"].fn(spark, sf_dir).collect()}
-    assert set(jvm) == set(blas)
-    for e in jvm:
-        assert abs(jvm[e][0] - blas[e][0]) < 2e-6, e
-        assert jvm[e][1] == blas[e][1], e
-
-
 def test_semdedup_contract_is_not_vacuous(spark, sf_dir):
     """The driver-hashed contract row must exercise real signal: some
     sampled vectors are isolated (so 'isolation => kept' checks actual

@@ -69,38 +69,3 @@ def test_stream_upsert_merges_across_micro_batches(spark, sf_dir):
                       key=os.path.getmtime)
     states = glob.glob(os.path.join(run_dirs[-1], "state_v*"))
     assert len(states) >= 3, f"expected >=3 micro-batches, got {len(states)}"
-
-
-def test_stream_sessionize_tws_matches_batch(spark, sf_dir):
-    """transformWithStateInPandas port of sessionization (r7): must equal
-    the batch sessionize result, like the applyInPandasWithState path.
-    ENV-GATED: the TWS streaming runner needs google.protobuf, absent in
-    this container (blocker recorded in BASELINE.md) — the test runs the
-    moment the env gains it."""
-    import uuid
-
-    import pytest
-
-    from agentic_data_pipeline_spark.catalog import table_path
-    from agentic_data_pipeline_spark.operators.streaming_ops import (
-        _as_stream_dir,
-    )
-    from agentic_data_pipeline_spark.registry import OPS, _ensure_loaded
-    from agentic_data_pipeline_spark.streaming.sessions import (
-        stream_sessionize_tws, tws_available,
-    )
-    from agentic_data_pipeline_spark.streaming.windows import run_to_memory
-
-    if not tws_available():
-        pytest.skip("google.protobuf unavailable: transformWithState's "
-                    "streaming runner cannot start in this container")
-    _ensure_loaded()
-    table = f"tws_sessions_{uuid.uuid4().hex[:8]}"
-    sdf = stream_sessionize_tws(
-        spark, _as_stream_dir(table_path(sf_dir, "events")))
-    run_to_memory(sdf, table, output_mode="append")
-    got = {(r["user_id"], r["session_id"]): (r["n_events"], r["sum_value"])
-           for r in spark.table(table).collect()}
-    want = {(r["user_id"], r["session_id"]): (r["n_events"], r["sum_value"])
-            for r in OPS["ext_sessionize"].fn(spark, sf_dir).collect()}
-    assert got == want
